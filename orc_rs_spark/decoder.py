@@ -99,16 +99,18 @@ def verify_roundtrip(
     reference's round-trip decode-equality tests
     (/root/reference/src/encoding/rlev1.rs:826-867) at distributed scale.
 
-    By default each side is projected to ``(doc_id, xxhash64(tokens),
-    size(tokens), n_tok)`` BEFORE the join, so the full-outer join shuffles
-    ~30 bytes/row instead of both sides' whole token payloads (guide §2.3:
-    shuffle keys and metadata, not payloads — on the 100 k-row bench this
-    cuts the join's shuffle from 2 x ~190 MB to ~6 MB). A corrupted decode
-    escapes detection only on a 64-bit xxhash collision for its exact row
-    (~2^-64 per row; the token arrays carry no null elements, the one input
-    class where Spark's hash is lossy). ``exact=True`` keeps the original
-    byte-for-byte array comparison for when absolute bit-identity evidence
-    is required (tests pin both modes against each other on tampered data).
+    By default each side is projected to ``(doc_id, xxhash64(tokens,
+    null-position mask), size(tokens), n_tok)`` BEFORE the join, so the
+    full-outer join shuffles ~30 bytes/row instead of both sides' whole
+    token payloads (guide §2.3: shuffle keys and metadata, not payloads —
+    on the 100 k-row bench this cuts the join's shuffle from 2 x ~190 MB
+    to ~6 MB). Spark's xxhash64 skips null elements, so the hash also
+    covers the ``transform(tokens, x -> x is null)`` mask: a null moved to
+    another position changes it. A corrupted decode escapes detection only
+    on a 64-bit xxhash collision for its exact row (~2^-64 per row).
+    ``exact=True`` keeps the original byte-for-byte array comparison for
+    when absolute bit-identity evidence is required (tests pin both modes
+    against each other on tampered data).
     """
 
     def proj(df: DataFrame, tag: str) -> DataFrame:
@@ -119,8 +121,11 @@ def verify_roundtrip(
                 F.col("n_tok").alias(f"{tag}_n_tok"),
             ]
         else:
+            # xxhash64 skips null elements, so [1,null,2] and [1,2,null]
+            # hash alike; the null-position mask term tells them apart
+            nulls = F.transform("tokens", lambda x: x.isNull())
             cols += [
-                F.xxhash64(F.col("tokens")).alias(f"{tag}_tokens"),
+                F.xxhash64(F.col("tokens"), nulls).alias(f"{tag}_tokens"),
                 F.col("tokens").isNull().alias(f"{tag}_toknull"),
                 F.size(F.col("tokens")).alias(f"{tag}_len"),
                 F.col("n_tok").alias(f"{tag}_n_tok"),

@@ -6,6 +6,13 @@ split strategy Spark's native ORC source uses, so at 100 TB on shared
 storage every executor streams only its stripes' byte ranges. Schema is
 derived from the ORC types, decode runs through the shared kernels inside
 ``mapInArrow`` (Arrow batches, no per-row Python).
+
+One exception: when planning leaves at most one stripe and that stripe
+fits in one batch (a pruned point lookup, say), ``read_orc`` decodes it on
+the driver with the same decode loop the tasks run and returns a local
+relation. The distributed path would launch a single task emitting a
+single batch, and starting that Python-worker job costs far more than
+decoding the stripe.
 """
 
 from __future__ import annotations
@@ -273,6 +280,17 @@ def _plan_scan_distributed(spark, files, predicates, sig0: tuple, sig_file: str)
     return paths_df.mapInArrow(plan, "path string, stripe bigint")
 
 
+def _local_frame(spark: SparkSession, batches: list[pa.RecordBatch], ddl: str) -> DataFrame:
+    """Driver-decoded batches as a DataFrame of schema ``ddl``: a local
+    relation, so actions on it run without any Python worker."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
+    schema = DataType.fromDDL(ddl)
+    table = pa.Table.from_batches(batches) if batches else to_arrow_schema(schema).empty_table()
+    return spark.createDataFrame(table, schema=schema)
+
+
 def read_orc(
     spark: SparkSession,
     path: str | list[str],
@@ -305,7 +323,14 @@ def read_orc(
     ``residual=True`` applies it IN-TASK with vectorized Arrow compute
     (SQL semantics: NULL never matches), so only matching rows cross
     into the JVM — requires every predicate column to be in ``columns``
-    when a projection is given."""
+    when a projection is given.
+
+    One-stripe rule: on the driver-planned path (≤
+    DISTRIBUTED_PLAN_THRESHOLD files), a scan whose pruned work list holds
+    at most one stripe, of at most ``batch_rows`` rows, is decoded on the
+    driver (same row-group pruning, bloom probes and ``residual`` filter
+    as a task) and returned as a local relation with the same schema: no
+    Python worker runs for it. Every other scan runs distributed."""
     import glob as _glob
     import os
 
@@ -343,8 +368,7 @@ def read_orc(
             f"{n} {_orc_type_ddl(tail0.footer.types, s, scan=True)}" for n, s in pairs
         )
     par = spark.sparkContext.defaultParallelism
-    def _decode_stream(pairs) -> Iterator[pa.RecordBatch]:
-        readers: dict[str, OrcFileReader] = {}
+    def _decode_stream(pairs, readers: dict[str, OrcFileReader]) -> Iterator[pa.RecordBatch]:
         for f, i in pairs:
             if f not in readers:
                 readers[f] = OrcFileReader(f)
@@ -375,7 +399,7 @@ def read_orc(
         ).repartition(4 * max(1, par))
 
         def decode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-            yield from _decode_stream(_pairs_from_plan(batches))
+            yield from _decode_stream(_pairs_from_plan(batches), {})
 
         return stripe_df.mapInArrow(decode, ddl)
 
@@ -385,10 +409,17 @@ def read_orc(
     # (one stage instead of two; contiguous ranges also keep a file's
     # stripes on one task, so the tail/Metadata reads amortize per file)
     work = _plan_scan_threaded(files, predicates)
+    if len(work) <= 1:
+        # the one-stripe rule: distributed, this scan would be one task
+        # emitting at most one batch
+        readers = {f: OrcFileReader(f) for f, _ in work}
+        if all(readers[f].tail.footer.stripes[i].number_of_rows <= batch_rows
+               for f, i in work):
+            return _local_frame(spark, list(_decode_stream(work, readers)), ddl)
     ids_df = spark.range(len(work), numPartitions=scan_partitions(len(work), par))
 
     def decode_ids(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        yield from _decode_stream(_pairs_from_ids(batches, work))
+        yield from _decode_stream(_pairs_from_ids(batches, work), {})
 
     return ids_df.mapInArrow(decode_ids, ddl)
 
@@ -415,7 +446,6 @@ def write_orc_dir(
     import os
 
     from pyspark import TaskContext
-    from pyspark.sql import functions as F
 
     from orc_rs_spark.orcfile.writer import OrcWriter
 
@@ -459,8 +489,8 @@ def write_orc_dir(
             os.replace(tmp, final)
         yield pa.RecordBatch.from_arrays([pa.array([n], type=pa.int64())], names=["n_rows"])
 
-    out = df.mapInArrow(sink, "n_rows bigint").agg(F.sum("n_rows").alias("n")).collect()
-    return int(out[0]["n"] or 0)
+    # one row per task, summed here: no Exchange and no final agg stage
+    return sum(r["n_rows"] for r in df.mapInArrow(sink, "n_rows bigint").collect())
 
 
 # ------------------------------------------------------- schema evolution

@@ -28,7 +28,9 @@ def _prewarm_workers(spark: SparkSession, cores: int) -> None:
     encode/ORC-write/read stage ran 3-5x its steady-state time (event-log
     task medians 4.4 s vs 0.85 s). This is provisioning work, equivalent to
     executor spin-up on a cluster: it runs one ``spark.range`` job, touches
-    no input data, and computes nothing that any later query reuses.
+    no input data, and computes nothing that any later query reuses. It
+    warms the workers alive at session start only: executors added later
+    (dynamic allocation) or workers respawned after a crash start cold.
 
     Opt out with ORC_RS_PREWARM=0 (e.g. single-query scripts where session
     startup dominates)."""
@@ -39,10 +41,14 @@ def _prewarm_workers(spark: SparkSession, cores: int) -> None:
 
     def warm(batches):
         import numpy as np
+        import pyarrow as pa
 
         import orc_rs_spark.chunk  # noqa: F401  (kernels chain)
         import orc_rs_spark.orcfile.spark_source  # noqa: F401 (writer+reader)
 
+        # pyarrow imports pandas lazily on its first array built from a
+        # Python list (~0.5 s per worker): pay it here, not in a real task
+        pa.array([0])
         a = np.ones(64 << 20, dtype=np.uint8)  # first-touch ~64 MB of heap
         del a
         import time
@@ -53,7 +59,7 @@ def _prewarm_workers(spark: SparkSession, cores: int) -> None:
     try:
         spark.range(cores, numPartitions=cores).mapInArrow(warm, "id long").count()
     except Exception:
-        pass  # warm-up must never break session creation
+        return  # warm-up must never break session creation; a later call retries
     spark._orc_rs_prewarmed = True
 
 

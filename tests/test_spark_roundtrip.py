@@ -263,3 +263,12 @@ def test_verify_roundtrip_hash_mode_detects_tampering(spark):
             assert n == want_n, f"exact={exact}"
             assert bad == 1, f"exact={exact}"
     df.unpersist()
+
+    # null-position tamper: xxhash64 skips null elements, so a null that
+    # moves inside an array must be caught by the mask term
+    ddl = "doc_id string, tokens array<int>, n_tok int"
+    orig = spark.createDataFrame([("d0", [1, None, 2], 3), ("d1", [4, None], 2)], ddl)
+    moved = spark.createDataFrame([("d0", [1, 2, None], 3), ("d1", [4, None], 2)], ddl)
+    for exact in (False, True):
+        assert verify_roundtrip(orig, orig, exact=exact) == (2, 0), f"exact={exact}"
+        assert verify_roundtrip(orig, moved, exact=exact) == (2, 1), f"exact={exact}"
